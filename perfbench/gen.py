@@ -208,7 +208,12 @@ class Poller:
     `dup_frac` of each page re-fetches an article an earlier page already
     carried; `corrupt_frac` of lines are cut short mid-object. Articles are
     taken from `docs` in order, wrapping around (which only adds
-    re-fetches). The same seed and call sequence give the same files."""
+    re-fetches). The same seed and call sequence give the same files.
+
+    Both shares are unverified assumptions: no source gives a re-fetch or
+    corrupt-line rate for these APIs. SURVEY.md T2 says the same article is
+    re-fetched on every 5-minute poll, so the deployed re-fetch share is
+    likely higher than the default here."""
 
     def __init__(self, docs: pa.Table, seed: int, dup_frac: float = 0.2, corrupt_frac: float = 0.01):
         self.rng = _rng(seed, 4)

@@ -4,8 +4,8 @@ Spans are recorded by the benchmark around calls into the engine's public
 functions; nothing inside the program is instrumented. Every span carries
 (name, start, end, parent, run id); counters are named numbers recorded
 beside them. Nothing is written until `write` is called once at the end.
-A layer's self time is its spans' duration minus the part of each span's
-interval that its child spans cover.
+A layer's self time is its spans' duration minus their child spans'
+durations.
 """
 
 from __future__ import annotations
@@ -48,27 +48,16 @@ class Tracer:
         self.counts[name] = self.counts.get(name, 0) + value
 
     def self_times(self) -> dict[str, float]:
-        """Self time summed per span name: each span's duration minus the
-        union of its children's intervals (children may not overlap in this
-        single-threaded recorder, but the union keeps it exact if they do)."""
-        children: dict[int, list[tuple[float, float]]] = {}
-        for s in self.spans:
-            if s.parent is not None:
-                children.setdefault(s.parent, []).append((s.start, s.end))
+        """Self time summed per span name: each span's duration minus its
+        children's durations (children never overlap: spans nest on one
+        thread)."""
         out: dict[str, float] = {}
-        for i, s in enumerate(self.spans):
-            covered, cur_s, cur_e = 0.0, None, None
-            for a, b in sorted(children.get(i, [])):
-                a, b = max(a, s.start), min(b, s.end)
-                if cur_e is None or a > cur_e:
-                    if cur_e is not None:
-                        covered += cur_e - cur_s
-                    cur_s, cur_e = a, b
-                else:
-                    cur_e = max(cur_e, b)
-            if cur_e is not None:
-                covered += cur_e - cur_s
-            out[s.name] = out.get(s.name, 0.0) + (s.end - s.start) - covered
+        for s in self.spans:
+            d = s.end - s.start
+            out[s.name] = out.get(s.name, 0.0) + d
+            if s.parent is not None:
+                parent = self.spans[s.parent].name
+                out[parent] = out.get(parent, 0.0) - d
         return out
 
     def total(self, name: str) -> float:

@@ -81,6 +81,8 @@ def test_tail_percentile_has_ten_samples_beyond(n):
 
 
 def test_forced_wrong_answer_raises_failed_frac(tmp_path):
+    """Three operations through run.run_ops, checked against a registry
+    oracle: one right, one wrong, one that raises."""
     from pyspark.sql import Row
     from __spark_entry__ import oracle_sql
 
@@ -92,12 +94,24 @@ def test_forced_wrong_answer_raises_failed_frac(tmp_path):
         rows = [Row(**r) for r in checks._fetch(oracle.con, sql)]
     finally:
         oracle.close()
-    assert checks.spark_rows_match(rows, expected)
     wrong = [Row(**{**rows[0].asDict(), "n_chars": rows[0]["n_chars"] + 1})] + rows[1:]
-    assert not checks.spark_rows_match(wrong, expected)
-    failed = sum(not checks.spark_rows_match(r, expected) for r in (rows, wrong))
-    assert stats.summarize([1.0, 1.0], 2, 2.0, 2, failed)["failed_frac"] == 0.5
-    assert stats.summarize([1.0, 1.0], 2, 2.0, 2, 0)["failed_frac"] == 0.0
+    now = [0.0]
+
+    def op(result):
+        def run_one():
+            now[0] += 1.0
+            if result is None:
+                raise RuntimeError("forced failure")
+            return 1.0, [(1.0, 1)], result
+        return run_one
+
+    ops = iter([op(rows), op(wrong), op(None)])
+    res = run.run_ops(lambda: next(ops)(), lambda r: checks.spark_rows_match(r, expected), 3.0,
+                      clock=lambda: now[0])
+    assert (res["attempted"], res["failed"]) == (3, 2)
+    summary = stats.summarize(res["lat"], res["items"], res["busy"], res["attempted"], res["failed"])
+    assert summary["failed_frac"] == 2 / 3
+    assert summary["samples"] == 2
 
 
 def _generate(out: str, seed: int) -> None:
@@ -133,17 +147,18 @@ def test_generated_inputs_have_the_declared_shares(tmp_path):
     assert 0.6 * n < len(urls) < 0.9 * n  # re-fetches repeat URLs
 
 
-def test_self_time_subtracts_covered_child_time():
+def test_self_time_subtracts_child_time():
     tr = Tracer("t")
     tr.spans = [
         Span("parent", 0.0, 10.0, None, "t"),
         Span("a", 1.0, 4.0, 0, "t"),
-        Span("b", 3.0, 6.0, 0, "t"),  # overlaps a: covered is [1, 6]
-        Span("leaf", 4.0, 5.0, 2, "t"),
+        Span("b", 5.0, 7.0, 0, "t"),
+        Span("leaf", 5.5, 6.5, 2, "t"),
+        Span("a", 8.0, 9.0, 0, "t"),
     ]
     self_s = tr.self_times()
-    assert self_s == {"parent": 5.0, "a": 3.0, "b": 2.0, "leaf": 1.0}
-    assert tr.total("a") == 3.0
+    assert self_s == {"parent": 4.0, "a": 4.0, "b": 1.0, "leaf": 1.0}
+    assert tr.total("a") == 4.0
 
 
 def test_refuses_to_run_outside_a_checkout(tmp_path):
