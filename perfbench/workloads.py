@@ -326,9 +326,11 @@ class News:
 class Curated:
     """The composed curation + near-dup + sentiment stream of
     streaming.full_pipeline, from a bootstrapped corpus and band index
-    (tools/stream_scale_probe.py). The first drop goes through the
-    program's own run_curated_ingest; the second through a cut of
-    curated_epoch into its public parts, for the per-layer figures."""
+    (tools/stream_scale_probe.py). The first two drops go through the
+    program's own run_curated_ingest, one epoch each: the first warms the
+    session, the second gives the untraced wall. The third goes through a
+    cut of curated_epoch into its public parts, for the per-layer
+    figures."""
 
     SEED_IDS = (0, 1, 2, 3)
 
@@ -338,7 +340,7 @@ class Curated:
         self.pairs = f"{work}/cur-pairs"
         self.curated = f"{work}/cur-curated"
         self.table = f"perfbench_idx_{uuid.uuid4().hex[:8]}"
-        self.drops = gen.curated_drops(f"{work}/cur-drops", seed, 2, DROP_DOCS)
+        self.drops = gen.curated_drops(f"{work}/cur-drops", seed, 3, DROP_DOCS)
         self.fed: set[int] = set()
 
     def bootstrap(self, spark) -> None:
@@ -360,15 +362,15 @@ class Curated:
         with open(drop) as f:
             self.fed |= {json.loads(line)["doc_id"] for line in f}
 
-    def op(self, spark) -> float:
-        """The first drop through run_curated_ingest, drained as one
-        availableNow epoch. Returns the wall seconds of the drain."""
+    def op(self, spark, k: int) -> float:
+        """Drop k through run_curated_ingest, drained as one availableNow
+        epoch. Returns the wall seconds of the drain."""
         from sentiment_analysis_data_pipeline_spark.streaming.full_pipeline import run_curated_ingest
 
-        drop = self.drops[0]
+        drop = self.drops[k]
         self._feed(drop)
         src = f"{self.work}/cur-src"
-        os.makedirs(src)
+        os.makedirs(src, exist_ok=True)
         t0 = time.perf_counter()
         os.rename(drop, f"{src}/{os.path.basename(drop)}")
         q = run_curated_ingest(
@@ -384,7 +386,7 @@ class Curated:
         return wall
 
     def traced(self, spark, tr: Tracer) -> None:
-        """The second drop through the public parts of
+        """The last drop through the public parts of
         full_pipeline.curated_epoch, in its order, inside a "curated" span.
         An approximation of the epoch: the gated and scored frames are
         checkpointed inside their spans so each part's work lands in its
@@ -400,8 +402,9 @@ class Curated:
             dedup_micro_batch,
         )
 
-        drop = self.drops[1]
+        drop = self.drops[-1]
         self._feed(drop)
+        batch_id = len(self.drops) - 1
         with tr.span("curated"):
             batch = spark.read.schema(DOC_STREAM_SCHEMA).json(drop)
             batch = batch.dropDuplicates(["doc_id"]).filter(F.col("text").isNotNull())
@@ -414,7 +417,7 @@ class Curated:
             kept = gated.filter("kept").select("doc_id", "text")
             with tr.span("dedup_stream.probe"):
                 pairs = dedup_micro_batch(spark, kept, self.table, self.corpus)
-                pairs.withColumn("batch_id", F.lit(1)).write.mode("append").parquet(self.pairs)
+                pairs.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(self.pairs)
             with tr.span("curated.sentiment"):
                 scored = sentiment_enrich(gated).select(
                     "doc_id", "text", "too_short", "too_repetitive", "low_quality", "non_english", "kept",
@@ -428,7 +431,7 @@ class Curated:
             with tr.span("curated.land"):
                 kept.write.mode("append").parquet(self.corpus)
         tr.count("curation.kept_frac", kept.count() / gated.count())
-        tr.count("dedup_stream.pairs_out", spark.read.parquet(self.pairs).filter("batch_id = 1").count())
+        tr.count("dedup_stream.pairs_out", spark.read.parquet(self.pairs).filter(F.col("batch_id") == batch_id).count())
         tr.count("dedup_stream.index_rows_end", spark.table(self.table).count())
 
     def check(self, spark) -> bool:
