@@ -439,6 +439,9 @@ class Curated:
         fed so far lands once in the curated store; the doc store is the
         seed plus every kept doc, once each; the band index covers exactly
         the doc store."""
+        # run_curated_ingest appends to the index through the stream's own
+        # session; this session's cached file list of the table predates it.
+        spark.catalog.refreshTable(self.table)
         cur = spark.read.parquet(self.curated).select("doc_id", "kept").collect()
         corpus = [r[0] for r in spark.read.parquet(self.corpus).select("doc_id").collect()]
         indexed = {r[0] for r in spark.table(self.table).select("doc").distinct().collect()}
