@@ -20628,6 +20628,10 @@ _REPROOF_PRIORITY = [
     "range_partition_bounds",
     "quality_signal_corr",
     "embedding_isotropy",
+    # r12-touched (OPTIMIZATION_r12.md), no oracle-gate row since the rewrite
+    "chi2_keywords",
+    "burrows_delta",
+    "dbscan_labels",
 ]
 
 

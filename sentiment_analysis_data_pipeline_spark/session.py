@@ -11,8 +11,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Driver heap cap when SPARK_DRIVER_MEMORY is unset: half the box's physical
+# memory (the OS, the Python workers and the off-heap buffers need the rest),
+# never above the 24g the engine was tuned with on large boxes.
+MAX_DRIVER_MEMORY_MB = 24 * 1024
+
+
+def _default_driver_memory() -> str:
+    try:
+        mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (ValueError, OSError, AttributeError):
+        return f"{MAX_DRIVER_MEMORY_MB}m"
+    return f"{max(1024, min(MAX_DRIVER_MEMORY_MB, mem_mb // 2))}m"
+
 
 def get_spark(app_name: str = "sentiment-engine", shuffle_partitions: int | None = None) -> SparkSession:
+    """The engine's session. A session already live on this thread is
+    returned as it is: `getOrCreate` would overwrite its confs with these
+    defaults (its shuffle partitions, for one), silently changing every
+    later query of whoever created it."""
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        return live
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sp = shuffle_partitions if shuffle_partitions is not None else int(cpus)
     builder = (
@@ -25,7 +45,7 @@ def get_spark(app_name: str = "sentiment-engine", shuffle_partitions: int | None
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import contextlib
 import errno
+import fcntl
 import hashlib
 import os
 import time
@@ -27,10 +28,12 @@ from ..schemas import TESTDATA_TABLES
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # A build lock older than this is a crash leftover (index builds complete in
-# seconds to low minutes), broken instead of honored.
+# seconds to low minutes), broken instead of honored. A lock whose holder
+# pid is dead is reclaimed at once; the age bound is the backstop.
 BUILD_LOCK_STALE_SEC = 900.0
 # How long a second builder waits for a live lock before giving up loudly.
-BUILD_LOCK_WAIT_SEC = 600.0
+# Longer than the stale bound, so a waiter always outlasts a crashed holder.
+BUILD_LOCK_WAIT_SEC = 1200.0
 
 
 def _warehouse_dir() -> str:
@@ -38,6 +41,42 @@ def _warehouse_dir() -> str:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
     return os.path.join(repo_root, "spark-warehouse")
+
+
+def _holder_dead(lock: str) -> bool:
+    """True iff the lock file names a pid that no longer exists. An empty
+    or unreadable lock (the holder has not written its pid yet) counts as
+    live. Pids are read in this process's pid namespace: builders sharing
+    the warehouse from another namespace (another container) would read as
+    dead, so they must not share one."""
+    try:
+        with open(lock) as f:
+            pid = int(f.read().strip())
+    except (OSError, ValueError):
+        return False
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return True
+    except PermissionError:
+        return False  # exists, owned by another user
+    return False
+
+
+def _reclaim(lock: str) -> None:
+    """Unlink `lock` if, under an flock on its directory, it is still stale
+    or held by a dead pid (build_lock docstring)."""
+    dfd = os.open(os.path.dirname(lock), os.O_RDONLY)
+    try:
+        fcntl.flock(dfd, fcntl.LOCK_EX)
+        try:
+            age = time.time() - os.stat(lock).st_mtime
+        except FileNotFoundError:
+            return
+        if age > BUILD_LOCK_STALE_SEC or _holder_dead(lock):
+            os.unlink(lock)
+    finally:
+        os.close(dfd)  # releases the flock
 
 
 @contextlib.contextmanager
@@ -50,7 +89,13 @@ def build_lock(final_loc: str):
     directory (recursive leaf-file listing would then silently serve
     duplicated rows). An O_EXCL lock file beside final_loc makes the whole
     build-and-swap critical section single-writer; a waiter polls until the
-    holder releases (or the lock goes stale -- crashed holder)."""
+    holder releases, or reclaims the lock when its holder crashed: the pid
+    written in the lock is dead, or the lock is stale.
+
+    Reclaims are serialized by an flock on the lock's directory, and the
+    check is repeated under it: two waiters that both saw a dead holder
+    cannot both unlink, because the second one re-reads the lock the first
+    one has since created, which names a live pid."""
     lock = final_loc.rstrip("/") + "__lock"
     deadline = time.time() + BUILD_LOCK_WAIT_SEC
     os.makedirs(os.path.dirname(lock), exist_ok=True)
@@ -67,9 +112,8 @@ def build_lock(final_loc: str):
                 age = time.time() - os.stat(lock).st_mtime
             except FileNotFoundError:
                 continue  # holder just released; retry immediately
-            if age > BUILD_LOCK_STALE_SEC:
-                with contextlib.suppress(FileNotFoundError):
-                    os.unlink(lock)  # crashed holder; reclaim
+            if age > BUILD_LOCK_STALE_SEC or _holder_dead(lock):
+                _reclaim(lock)
                 continue
             if time.time() > deadline:
                 raise TimeoutError(

@@ -18,17 +18,14 @@ band-key index table and (b) a doc-store parquet. Each micro-batch
      so the co-located-join property survives the append) and the batch's
      docs to the doc store -- batch N+1 dedups against everything before it.
 
-Delivery: probe-before-append makes a replayed batch (foreachBatch retry)
-re-emit the same pairs rather than miss any; pair output is
-batch_id-stamped so downstream consumers can dedupe replays exactly once
-(the same contract merge_into_parquet implements for the article sink). A
-re-crawled doc_id already in the doc store is dropped before landing, and
-the index append itself anti-joins against ids already indexed
-(append_to_band_index) -- so even a foreachBatch RETRY that fires after
-the index write but before the doc-store write cannot land a second
-signature set for an id. The three epoch writes are individually
-idempotent under replay, not transactional: a crash between them leaves
-(at worst) pairs without corpus rows, which the next attempt repairs.
+Delivery follows the epoch contract of streaming/_log.py: the prologue
+drops re-crawled doc_ids already in the doc store, and the doc store lands
+last. Probe-before-append makes a replayed batch re-emit the same pairs
+rather than miss any; pair output is batch_id-stamped so downstream
+consumers can dedupe replays exactly once. The index append anti-joins
+against ids already indexed (append_to_band_index), so a retry that fires
+after the index write but before the doc-store write cannot land a second
+signature set for an id.
 """
 
 from __future__ import annotations
@@ -40,6 +37,7 @@ from ..functions import dialect as D
 from ..functions import text as TX
 from ..operators.dedup import minhash_band_keys, minhash_pairs
 from ..operators.dedup_index import new_batch_candidates
+from ._log import fresh_epoch, start_epochs
 
 DOC_STREAM_SCHEMA = "doc_id long, text string"
 INDEX_BUCKETS = 8
@@ -159,11 +157,9 @@ def run_streaming_dedup(
         # probe registers live there, so every read/sql in this epoch must
         # use the batch's session, not the outer one
         bs = batch.sparkSession
-        batch = batch.dropDuplicates(["doc_id"]).filter(F.col("text").isNotNull())
         # re-crawl guard: ids already in the doc store keep their original
         # signatures; the fresh copy is neither landed nor re-signatured
-        seen = bs.read.parquet(corpus_path).select("doc_id")
-        batch = batch.join(seen, "doc_id", "left_anti").localCheckpoint(eager=True)
+        batch = fresh_epoch(batch, "doc_id", corpus_path, payload="text")
         if not batch.take(1):
             return
         pairs = dedup_micro_batch(bs, batch, index_table, corpus_path, threshold)
@@ -175,9 +171,4 @@ def run_streaming_dedup(
         append_to_band_index(bs, batch, index_table)
         batch.select("doc_id", "text").write.mode("append").parquet(corpus_path)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_epochs(stream, epoch, checkpoint_dir)

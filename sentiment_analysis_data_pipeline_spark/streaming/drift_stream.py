@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries import PSI_BAND_WIDTH, psi_tail_sql
-from ._log import COMPACTED_STAMP, compact_log, guarded_append
+from ._log import COMPACTED_STAMP  # noqa: F401 -- re-exported beside BANDS_SCHEMA
+from ._log import compact_log, guarded_append, start_epochs
 
 BANDS_SCHEMA = "band bigint, n bigint, batch_id bigint"
 DOC_STREAM_SCHEMA = "doc_id long, text string"
@@ -50,13 +51,7 @@ def append_batch_bands(
 ) -> None:
     """Collapse one micro-batch to its band partial and append it,
     replay-idempotently (shared _log protocol)."""
-    guarded_append(
-        spark,
-        log_path,
-        BANDS_SCHEMA,
-        batch_id,
-        batch_bands(batch).withColumn("batch_id", F.lit(batch_id).cast("long")),
-    )
+    guarded_append(spark, log_path, BANDS_SCHEMA, batch_id, batch_bands(batch))
 
 
 def read_bands(spark: SparkSession, log_path: str) -> DataFrame:
@@ -89,15 +84,10 @@ def read_psi(
 
 
 def compact_bands(spark: SparkSession, log_path: str) -> None:
-    """Fold the epoch log back to one merged partial (the shared crash-safe
-    swap; run only in an ingest pause -- _log.py contract)."""
-    compact_log(
-        spark,
-        log_path,
-        lambda: read_bands(spark, log_path).withColumn(
-            "batch_id", F.lit(COMPACTED_STAMP).cast("long")
-        ),
-    )
+    """Fold the epoch log back to one merged partial stamped COMPACTED_STAMP
+    (the shared crash-safe swap; run only in an ingest pause -- _log.py
+    contract)."""
+    compact_log(spark, log_path, lambda: read_bands(spark, log_path))
 
 
 def run_streaming_drift(
@@ -114,9 +104,4 @@ def run_streaming_drift(
     def epoch(batch: DataFrame, batch_id: int) -> None:
         append_batch_bands(batch.sparkSession, batch, log_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_epochs(stream, epoch, checkpoint_dir)

@@ -5,9 +5,8 @@ chained the way a continuous training-data ingest actually runs.
 
 Epoch shape per micro-batch:
 
-  1. VALIDATE: in-batch id dedup, null-text drop, then the re-crawl /
-     replay guard (anti-join the doc store's ids -- a doc already landed
-     keeps its original record and signatures).
+  1. VALIDATE: the epoch prologue of streaming/_log.py over the doc store
+     (a doc already landed keeps its original record and signatures).
   2. CURATION GATE (streaming/curation_stream.curation_gate): the
      stateless flag projection -- too_short / too_repetitive /
      low_quality / non_english / kept -- flag-for-flag equal to the batch
@@ -19,14 +18,12 @@ Epoch shape per micro-batch:
   4. SENTIMENT (plans/pipeline.sentiment_enrich) over ALL gated rows --
      rejected docs keep their scores too, so the curated store stays
      fully explainable without a re-run.
-  5. LAND: curated rows (flags + sentiment struct) guarded by an
-     anti-join on the curated store's ids; pairs batch_id-stamped
-     (replay-dedupable downstream); index append (internally idempotent,
-     append_to_band_index's anti-join); doc-store append LAST -- the
-     probe-before-append ordering means a replayed epoch re-emits the
-     same pairs rather than missing any, and every write is individually
-     idempotent under replay (the dedup_stream delivery contract,
-     extended to the curated sink).
+  5. LAND (the land rules of streaming/_log.py): pairs batch_id-stamped
+     (replay-dedupable downstream); curated rows (flags + sentiment
+     struct) landed idempotently on doc_id; index append (internally
+     idempotent, append_to_band_index's anti-join); doc-store append
+     LAST -- the probe-before-append ordering means a replayed epoch
+     re-emits the same pairs rather than missing any.
 
 100 TB shape: everything per-epoch is projection + broadcast/bucketed
 joins sized by the BATCH (the corpus side of the probe reads bucket files
@@ -40,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._log import fresh_epoch, land, start_epochs
 from .curation_stream import curation_gate
 from .dedup_stream import DOC_STREAM_SCHEMA, append_to_band_index, dedup_micro_batch
 
@@ -59,12 +57,7 @@ def curated_epoch(
     use `bs`)."""
     from ..plans.pipeline import sentiment_enrich
 
-    batch = batch.dropDuplicates(["doc_id"]).filter(F.col("text").isNotNull())
-    # like dedup_stream, the pipeline starts from a BOOTSTRAPPED corpus
-    # snapshot + band index (possibly empty relations, but existing) -- so
-    # the re-crawl guard reads unconditionally
-    seen = bs.read.parquet(corpus_path).select("doc_id")
-    batch = batch.join(seen, "doc_id", "left_anti").localCheckpoint(eager=True)
+    batch = fresh_epoch(batch, "doc_id", corpus_path, payload="text")
     if not batch.take(1):
         return
 
@@ -93,17 +86,7 @@ def curated_epoch(
             F.col("textblob_polarity"),
         ).alias("sentiment"),
     )
-    # Path-absent (first epoch) is an FS existence check, not a swallowed
-    # exception: any real read error must propagate, or a replayed epoch
-    # would silently skip the idempotence anti-join and land duplicate
-    # curated rows (round-8 ADVICE fix).
-    from ..sources.tables import _fs_for
-
-    fs, hpath = _fs_for(bs, curated_path)
-    if fs.exists(hpath):
-        landed = bs.read.parquet(curated_path).select("doc_id")
-        scored = scored.join(landed, "doc_id", "left_anti")
-    scored.write.mode("append").parquet(curated_path)
+    land(scored, curated_path, "doc_id")
 
     append_to_band_index(bs, kept, index_table)
     kept.write.mode("append").parquet(corpus_path)
@@ -136,9 +119,4 @@ def run_curated_ingest(
             threshold,
         )
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_epochs(stream, epoch, checkpoint_dir)

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions import dialect as D
 from ..operators.sketch import HDR_SUB_BITS, hdr_cells, hdr_lower_sql
-from ._log import COMPACTED_STAMP, compact_log, guarded_append
+from ._log import compact_log, guarded_append, start_epochs
 
 CELLS_SCHEMA = "segment string, idx bigint, cnt bigint, batch_id bigint"
 EVENT_STREAM_SCHEMA = "event_id long, event_type string, value double"
@@ -40,15 +40,7 @@ def append_batch_cells(
     """Collapse one micro-batch to its histogram partial and append it,
     replay-idempotently: if this epoch's id is already in the log (a
     foreachBatch retry after a successful write), land nothing."""
-    # replay-idempotence + append/compact mutual exclusion live in
-    # _log.guarded_append (round-9: the ingest-pause contract is mechanical)
-    guarded_append(
-        spark,
-        cells_path,
-        CELLS_SCHEMA,
-        batch_id,
-        hdr_cells(batch).withColumn("batch_id", F.lit(batch_id).cast("long")),
-    )
+    guarded_append(spark, cells_path, CELLS_SCHEMA, batch_id, hdr_cells(batch))
 
 
 def read_hist(spark: SparkSession, cells_path: str) -> DataFrame:
@@ -95,13 +87,7 @@ def compact_cells(spark: SparkSession, cells_path: str) -> None:
     bounded read-side work after many epochs. Crash-safe via the shared
     stage-then-atomic-rename swap (_log.compact_log); run only in an
     ingest pause (_log.py contract)."""
-    compact_log(
-        spark,
-        cells_path,
-        lambda: read_hist(spark, cells_path).withColumn(
-            "batch_id", F.lit(COMPACTED_STAMP).cast("long")
-        ),
-    )
+    compact_log(spark, cells_path, lambda: read_hist(spark, cells_path))
 
 
 def run_streaming_hdr(
@@ -119,12 +105,7 @@ def run_streaming_hdr(
         # foreachBatch hands the batch to a CLONED session; use it for reads
         append_batch_cells(batch.sparkSession, batch, cells_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_epochs(stream, epoch, checkpoint_dir)
 
 
 __all__ = [

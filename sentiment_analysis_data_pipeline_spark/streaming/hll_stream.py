@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ._log import COMPACTED_STAMP, compact_log, guarded_append
+from ._log import compact_log, guarded_append, start_epochs
 
 SKETCH_SCHEMA = "event_type string, sk binary, batch_id bigint"
 EVENT_STREAM_SCHEMA = "event_type string, user_id long"
@@ -44,15 +44,7 @@ def append_batch_sketches(
     """Collapse one micro-batch to its per-segment sketch partials and
     append them, replay-idempotently: if this epoch's id is already in the
     log (a foreachBatch retry after a successful write), land nothing."""
-    # replay-idempotence + append/compact mutual exclusion live in
-    # _log.guarded_append (round-9: the ingest-pause contract is mechanical)
-    guarded_append(
-        spark,
-        log_path,
-        SKETCH_SCHEMA,
-        batch_id,
-        batch_sketches(batch).withColumn("batch_id", F.lit(batch_id).cast("long")),
-    )
+    guarded_append(spark, log_path, SKETCH_SCHEMA, batch_id, batch_sketches(batch))
 
 
 def read_estimates(spark: SparkSession, log_path: str) -> DataFrame:
@@ -95,7 +87,6 @@ def compact_sketches(spark: SparkSession, log_path: str) -> None:
             .parquet(log_path)
             .groupBy("event_type")
             .agg(F.expr("hll_union_agg(sk)").alias("sk"))
-            .withColumn("batch_id", F.lit(COMPACTED_STAMP).cast("long"))
         ),
     )
 
@@ -115,9 +106,4 @@ def run_streaming_hll(
         # foreachBatch hands the batch to a CLONED session; use it for reads
         append_batch_sketches(batch.sparkSession, batch, log_path, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_epochs(stream, epoch, checkpoint_dir)

@@ -9,10 +9,8 @@ Reference behavior replaced here:
          exactly-once into idempotent sinks.
   S5/J2/T5  read-before-write URL dedup + unique-index backstop
          (database/mongodb_handler.py:53-58, database/init-mongo.js:8)
-         -> foreachBatch MERGE: dropDuplicates within the batch + left-anti
-         join against the sink table. The reference's check-then-insert race
-         disappears: the anti-join and append are one batch transaction per
-         epoch.
+         -> the epoch contract of streaming/_log.py: in-batch dedup, then
+         an idempotent land (anti-join against the sink, then append).
   T1     5-minute producer cadence (scripts/start_producers.py:42-43)
          -> trigger(processingTime="5 minutes"); tests use availableNow.
   T3/T4  1-hour lookback that silently drops late data
@@ -29,28 +27,13 @@ Trigger.AvailableNow -- the two sources are interchangeable behind
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import ENVELOPE_SCHEMA
+from ._log import fresh_epoch, land, landed, start_epochs
 
 TOPIC_NEWS_RAW = "news-raw"  # scripts/create_topics.sh:13-19
-
-
-def _existing_keys_or_none(spark: SparkSession, path: str, *cols: str) -> DataFrame | None:
-    """Distinct key column(s) of a parquet sink, or None if the sink does not
-    exist yet. ONLY AnalysisException (missing path / empty dir with no
-    inferable schema -- the first-epoch cases) maps to None; any other read
-    failure (corrupt footer, permissions, transient FS error) PROPAGATES so
-    the checkpoint retries the batch. Swallowing those would silently disable
-    the anti-join dedup for the epoch and double-land rows, breaking the
-    unique-URL guarantee the sink exists to reproduce."""
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException:
-        return None
-    return df.select(*cols).distinct()
 
 
 def kafka_article_stream(
@@ -89,17 +72,9 @@ def file_article_stream(spark: SparkSession, source_dir: str) -> DataFrame:
 
 def _parse_envelopes(json_df: DataFrame) -> DataFrame:
     """P3 envelope-shape validation via from_json: corrupt rows parse to null
-    and are filtered (consumers/mongodb_consumer.py:42-47 semantics)."""
-    parsed = json_df.select(F.from_json("json", ENVELOPE_SCHEMA).alias("env"))
-    return (
-        parsed.filter(
-            F.col("env").isNotNull()
-            & F.col("env.source_api").isNotNull()
-            & F.col("env.article").isNotNull()
-        )
-        .select("env.*")
-        .withColumn("url", F.col("article.url"))
-    )
+    and are filtered (consumers/mongodb_consumer.py:42-47 semantics). The
+    valid side of split_valid_corrupt, so both paths share one predicate."""
+    return split_valid_corrupt(json_df)[0]
 
 
 def kafka_envelope_sink_options(brokers: str, topic: str) -> dict[str, str]:
@@ -130,11 +105,10 @@ def merge_into_parquet(target_path: str, key: str = "url"):
     """S5/J2/T5: idempotent MERGE-style sink for foreachBatch.
 
     Per epoch: dedup within the batch (source duplicates -- the same article
-    re-fetched every poll), then left-anti join against the current sink
-    content (cross-history duplicates), then append. With checkpointing this
-    gives exactly-once landing; the reference's read-check-insert race
-    (database/mongodb_handler.py:53-58) cannot occur because each epoch is a
-    single append.
+    re-fetched every poll), then the idempotent land of streaming/_log.py
+    (cross-history duplicates). With checkpointing this gives exactly-once
+    landing; the reference's read-check-insert race
+    (database/mongodb_handler.py:53-58) cannot occur.
 
     When Delta Lake is present in the session (delta_available), the sink
     upgrades to a real transactional ``MERGE WHEN NOT MATCHED THEN INSERT``
@@ -149,7 +123,9 @@ def merge_into_parquet(target_path: str, key: str = "url"):
     table, and a blind ``mode('overwrite').save`` on the first post-install
     epoch would destroy every previously-landed row. Such a sink therefore
     STAYS on the parquet anti-join path -- no data is ever overwritten; a
-    fresh Delta table is only created when the target is genuinely empty.
+    fresh Delta table is only created when the target is genuinely empty:
+    the path is absent, or it is a directory that holds no data files (made
+    in advance, or left empty by a crashed first write).
     Converting an existing parquet sink to Delta is an explicit offline
     operation (``CONVERT TO DELTA``), not something an ingest epoch may do
     implicitly.
@@ -170,15 +146,15 @@ def merge_into_parquet(target_path: str, key: str = "url"):
                     .execute()
                 )
                 return
-            if _existing_keys_or_none(spark, target_path, key) is None:
-                # Genuinely empty target: create the Delta table.
+            existing = landed(spark, target_path, deduped.select(key).schema)
+            if existing is None or not existing.inputFiles():
+                # Genuinely empty target (absent, or a directory with no
+                # data files): create the Delta table.
                 deduped.write.format("delta").mode("overwrite").save(target_path)
                 return
             # Non-Delta data present: fall through to the non-destructive
             # parquet anti-join append (see docstring, Upgrade safety).
-        existing = _existing_keys_or_none(spark, target_path, key)
-        fresh = deduped if existing is None else deduped.join(existing, on=key, how="left_anti")
-        fresh.write.mode("append").parquet(target_path)
+        land(deduped, target_path, key)
 
     return do_merge
 
@@ -197,17 +173,12 @@ def run_file_ingest(
     faithful analog of the reference's scheduled incremental batch, T3);
     otherwise runs continuously on the reference's 5-minute cadence (T1).
     """
-    stream = file_article_stream(spark, source_dir)
-    writer = (
-        stream.writeStream.foreachBatch(merge_into_parquet(target_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_epochs(
+        file_article_stream(spark, source_dir),
+        merge_into_parquet(target_path),
+        checkpoint_dir,
+        None if available_now else processing_time,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def windowed_freshness(stream: DataFrame, ts_col: str = "fetched_at") -> DataFrame:
@@ -368,29 +339,19 @@ def run_sentiment_stream(
     per hour disappears entirely.
 
     Crash safety across the TWO appends (non-atomic: plain parquet, no
-    transaction log): the processed table commits FIRST and is itself
-    idempotent (anti-join on doc_id against its own contents), the raw table
-    commits LAST. A replayed epoch therefore recomputes the same `fresh` set
-    (raw unchanged until the final append), re-scores it, and the doc_id
-    anti-join drops whatever already landed -- exactly-once on BOTH tables
-    under checkpoint replay. The raw-first ordering this replaces was
-    at-most-once on processed: a crash between the appends made the replay's
-    URL anti-join see its own rows as already-seen and silently skip scoring.
+    transaction log): the epoch prologue and the land rules of
+    streaming/_log.py, with the processed table landing FIRST (idempotent
+    on doc_id) and the raw table, which defines "seen", LAST. A replayed
+    epoch therefore recomputes the same `fresh` set, re-scores it, and the
+    doc_id anti-join drops whatever already landed -- exactly-once on BOTH
+    tables under checkpoint replay. Raw-first would be at-most-once on
+    processed: a crash between the appends would make the replay see its
+    own rows as already seen and silently skip scoring.
     """
     from ..plans.pipeline import sentiment_enrich
 
     def epoch(batch: DataFrame, batch_id: int) -> None:
-        sp = batch.sparkSession
-        deduped = batch.dropDuplicates(["url"])
-        seen = _existing_keys_or_none(sp, raw_path, "url")
-        fresh = deduped if seen is None else deduped.join(seen, on="url", how="left_anti")
-        # Truncate lineage NOW (eager localCheckpoint): the anti-join must be
-        # evaluated against the sink's pre-append contents. persist() is NOT
-        # enough -- appending to raw_path invalidates every cached plan that
-        # references that path (CacheManager.recacheByPath), so a merely
-        # cached anti-join would be recomputed against the post-append file
-        # list and see its own rows as already-seen, scoring nothing.
-        fresh = fresh.localCheckpoint(eager=True)
+        fresh = fresh_epoch(batch, "url", raw_path)
         scored = sentiment_enrich(
             fresh.withColumn(
                 "text",
@@ -412,17 +373,7 @@ def run_sentiment_stream(
             "url",
             F.struct("overall", "confidence", "vader_compound", "textblob_polarity").alias("sentiment"),
         )
-        landed = _existing_keys_or_none(sp, processed_path, "doc_id")
-        if landed is not None:
-            processed = processed.join(landed, on="doc_id", how="left_anti")
-        processed.write.mode("append").parquet(processed_path)
+        land(processed, processed_path, "doc_id")
         fresh.write.mode("append").parquet(raw_path)
 
-    stream = file_article_stream(spark, source_dir)
-    return (
-        stream.writeStream.foreachBatch(epoch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_epochs(file_article_stream(spark, source_dir), epoch, checkpoint_dir)

@@ -6,7 +6,10 @@ from __future__ import annotations
 import json
 import shutil
 import tempfile
+import uuid
 from pathlib import Path
+
+import pytest
 
 from sentiment_analysis_data_pipeline_spark.streaming.ingest import (
     run_sentiment_stream,
@@ -73,24 +76,71 @@ def test_sentiment_stream_replay_after_partial_commit(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_merge_sink_transient_read_error_raises(spark):
-    """A non-missing-path read failure (corrupt footer standing in for any
-    transient FS error) must FAIL the batch -- not silently skip the
-    anti-join and double-land rows."""
-    import pytest
-
+def _merge_epoch(spark, work, sink):
     from sentiment_analysis_data_pipeline_spark.streaming.ingest import merge_into_parquet
+
+    batch = spark.createDataFrame([("https://e.com/1", 1)], "url string, x int")
+    merge_into_parquet(sink)(batch, 0)
+
+
+def _curated_epoch(spark, work, sink):
+    """One full_pipeline.curated_epoch from a one-doc bootstrapped corpus
+    and band index, landing its curated rows in `sink`."""
+    from sentiment_analysis_data_pipeline_spark.operators.dedup import minhash_band_keys
+    from sentiment_analysis_data_pipeline_spark.sources.tables import (
+        drop_table_with_files,
+        write_bucketed,
+    )
+    from sentiment_analysis_data_pipeline_spark.streaming import dedup_stream, full_pipeline
+
+    schema = dedup_stream.DOC_STREAM_SCHEMA
+    corpus, table = str(work / "corpus"), f"corrupt_sink_idx_{uuid.uuid4().hex[:8]}"
+    seed = spark.createDataFrame([(1, "quiet rivers run past old stone mills")], schema)
+    seed.write.parquet(corpus)
+    write_bucketed(minhash_band_keys(seed, "text", "doc_id"), table, "band_key", dedup_stream.INDEX_BUCKETS)
+    try:
+        batch = spark.createDataFrame([(2, "great excellent best work by the fine team today")], schema)
+        full_pipeline.curated_epoch(spark, batch, 0, table, corpus, str(work / "pairs"), sink)
+    finally:
+        drop_table_with_files(spark, table)
+
+
+def _users_epoch(spark, work, sink):
+    from sentiment_analysis_data_pipeline_spark.streaming import experiment_stream
+
+    batch = spark.createDataFrame([(1, 0, 7, "view")], experiment_stream.EVENT_STREAM_SCHEMA)
+    experiment_stream.append_batch(spark, batch, str(work / "daily"), sink, 0)
+
+
+@pytest.mark.parametrize(
+    "land_epoch",
+    [_merge_epoch, _curated_epoch, _users_epoch],
+    ids=["merge", "curated", "users"],
+)
+def test_merge_sink_transient_read_error_raises(spark, land_epoch):
+    """The shared absent-sink rule, over every sink that uses it: an absent
+    sink, or an empty sink directory (a first write that crashed), lands the
+    first epoch, and a non-missing-path read failure (corrupt footer
+    standing in for any transient FS error) must FAIL the batch -- not
+    silently skip the anti-join and double-land rows."""
+    from pyspark.errors import AnalysisException
 
     root = Path(tempfile.mkdtemp(prefix="corrupt-sink-"))
     try:
-        sink = root / "sink"
+        for case in ("absent", "empty"):
+            (root / case).mkdir()
+            sink = root / case / "sink"
+            if case == "empty":
+                sink.mkdir()
+            land_epoch(spark, root / case, str(sink))
+            assert spark.read.parquet(str(sink)).count() == 1, case
+
+        (root / "corrupt").mkdir()
+        sink = root / "corrupt" / "sink"
         sink.mkdir()
         (sink / "part-00000.parquet").write_bytes(b"this is not a parquet file")
-        batch = spark.createDataFrame([("https://e.com/1", 1)], "url string, x int")
         with pytest.raises(Exception) as ei:
-            merge_into_parquet(str(sink))(batch, 0)
-        from pyspark.errors import AnalysisException
-
+            land_epoch(spark, root / "corrupt", str(sink))
         assert not isinstance(ei.value, AnalysisException)
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -9,21 +9,12 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
 import sentiment_analysis_data_pipeline_spark.queries as Q
 import sentiment_analysis_data_pipeline_spark.sources.tables as T
 from sentiment_analysis_data_pipeline_spark.functions import dialect as D
 from sentiment_analysis_data_pipeline_spark.sources.tables import scattered
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from sentiment_analysis_data_pipeline_spark.session import get_spark
-
-    return get_spark("r12-tests")
 
 
 def test_source_bytes_directory_layout(spark, tmp_path):

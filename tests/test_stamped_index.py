@@ -11,7 +11,7 @@ fixes under test:
   the re-registered external table keeps its bucket spec (co-located joins
   stay Exchange-free);
 - build_lock serializes concurrent builders (O_EXCL beside final_loc) and
-  reclaims stale locks from crashed holders;
+  reclaims locks from crashed holders (dead pid, or stale);
 - swap_directory fails LOUDLY if the final slot is occupied mid-swap
   instead of letting the rename nest directories.
 """
@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import os
 import re
+import subprocess
+import sys
 import time
 
 import pytest
@@ -110,6 +112,27 @@ def test_build_lock_excludes_and_reclaims_stale(tmp_path, monkeypatch):
     with T.build_lock(loc):
         pass
     assert not os.path.exists(loc + "__lock")
+
+
+def test_build_lock_reclaims_dead_holder_at_once(tmp_path):
+    """A lock left by a crashed builder (its pid is dead) is reclaimed at
+    once, not after BUILD_LOCK_STALE_SEC; a fresh lock of a live pid is
+    not."""
+    loc = str(tmp_path / "tbl")
+    gone = subprocess.Popen([sys.executable, "-c", "pass"])
+    gone.wait()
+    with open(loc + "__lock", "w") as f:
+        f.write(str(gone.pid))
+    t0 = time.monotonic()
+    with T.build_lock(loc):
+        with open(loc + "__lock") as f:
+            assert f.read() == str(os.getpid())
+    assert time.monotonic() - t0 < 1.0
+    assert not T._holder_dead(str(tmp_path / "missing__lock"))
+    with open(loc + "__lock", "w") as f:
+        f.write(str(os.getpid()))
+    assert not T._holder_dead(loc + "__lock")
+    assert T.BUILD_LOCK_WAIT_SEC > T.BUILD_LOCK_STALE_SEC
 
 
 def test_swap_detects_concurrent_install(spark, tmp_path, monkeypatch):

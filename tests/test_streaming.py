@@ -377,3 +377,16 @@ def test_delta_upgrade_never_overwrites_parquet_sink(spark, dirs, monkeypatch):
     rows = {r.url: r.v for r in spark.read.parquet(target).collect()}
     # u1/u2 survive (no overwrite), u2 not re-landed, u3 appended.
     assert rows == {"u1": "a", "u2": "b", "u3": "c"}
+
+    # An existing sink directory with no data files (made in advance, or
+    # emptied by a crashed first write) is empty like an absent path: the
+    # epoch takes the Delta-create branch, which fails here only because no
+    # Delta data source is on the classpath.
+    empty = dirs / "empty_sink"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    with pytest.raises(Exception, match="(?i)delta"):
+        ingest.merge_into_parquet(str(empty), key="url")(
+            spark.createDataFrame([("u9", "z")], "url string, v string"), 0
+        )
+    assert not list(empty.glob("*.parquet"))

@@ -1,17 +1,18 @@
-"""Round-11 optimization profiler: isolate one query at a time per guide §1.
+"""Query profiler: isolate one query at a time (spark optimization guide §1).
 
-For each named query (default: the current bench board's heaviest), run
+For each named query, run
 
   - an untimed warm build + noop-sink write (file listing, codegen,
     shuffle-file creation land here, never in a sample),
   - N timed noop-sink writes (`df.write.format("noop")` -- computes every
     column of every row, §1.4) so we time the computation, not collect(),
-  - capture `.explain("formatted")` to plans/r12/<name>_<tag>.txt,
+  - capture `.explain("formatted")` to <plan-dir>/<name>_<tag>.txt,
   - count plan features (Exchange, SortMergeJoin/BroadcastHashJoin,
     BatchEvalPython/ArrowEvalPython, WholeStageCodegen spans) so plan-shape
-    claims in OPTIMIZATION_r12.md are mechanical, not eyeballed.
+    claims in the OPTIMIZATION_r*.md ledgers are mechanical, not eyeballed.
 
-Usage: python tools/r12_profile.py [--tag before|after] [--runs 3] name ...
+Usage: python tools/query_profile.py [--tag before|after] [--runs 3]
+                 [--plan-dir plans/r12] [--sf-dir DIR] name ...
 Writes a JSON summary line per query to stdout and the plan file per query.
 Jobs are labelled (setJobDescription) per guide §1.5.
 """
@@ -25,10 +26,11 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+HERE = os.path.dirname(os.path.abspath(__file__))
+REPO = os.path.dirname(HERE)
+sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PLAN_DIR = os.path.join("/root/repo", "plans", "r12")
+from sentiment_analysis_data_pipeline_spark.sources.tables import DEFAULT_SF_DIR  # noqa: E402
 
 PLAN_FEATURES = {
     "exchanges": r"\bExchange\b",
@@ -51,14 +53,15 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--sf-dir", default=SF_DIR)
+    ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
+    ap.add_argument("--plan-dir", default=os.path.join(REPO, "plans", "profile"))
     args = ap.parse_args()
 
     from sentiment_analysis_data_pipeline_spark.queries import spark_queries
     from sentiment_analysis_data_pipeline_spark.session import get_spark
 
-    os.makedirs(PLAN_DIR, exist_ok=True)
-    spark = get_spark("r12-profile")
+    os.makedirs(args.plan_dir, exist_ok=True)
+    spark = get_spark("profile")
     qs = spark_queries()
     spark.range(1000).selectExpr("sum(id)").collect()  # JVM warmup
 
@@ -68,7 +71,7 @@ def main() -> None:
             continue
         fn = qs[name]
         sc = spark.sparkContext
-        sc.setJobDescription(f"r12:{name}:warm")
+        sc.setJobDescription(f"profile:{name}:warm")
         t_build0 = time.perf_counter()
         df = fn(spark, args.sf_dir)
         build_s = time.perf_counter() - t_build0
@@ -76,12 +79,12 @@ def main() -> None:
         plan = df._sc is not None and df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
-        path = os.path.join(PLAN_DIR, f"{name}_{args.tag}.txt")
+        path = os.path.join(args.plan_dir, f"{name}_{args.tag}.txt")
         with open(path, "w") as f:
             f.write(plan)
         samples = []
         for i in range(args.runs):
-            sc.setJobDescription(f"r12:{name}:sample{i}")
+            sc.setJobDescription(f"profile:{name}:sample{i}")
             t0 = time.perf_counter()
             # re-build per sample: index-ensure / checkpoint work inside the
             # query fn is part of what the bench times, so it belongs here too
